@@ -11,7 +11,7 @@ import org.apache.spark.sql.SparkSession
   * Dev/evidence tool like Scratch, not part of the driver contract. */
 object Audit {
   def main(args: Array[String]): Unit = {
-    val spark = graft.sources.Sessions.local("32", logLevel = "ERROR")
+    val spark = graft.sources.Sessions.localFromEnv(logLevel = "ERROR")
     val d = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     val names =
       if (args.length > 1 && args(1) == "ALL") SparkEntry.queries.keys.toSeq.sorted

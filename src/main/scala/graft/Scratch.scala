@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 /** Dev scratch runner (not part of the driver contract). */
 object Scratch {
   def main(args: Array[String]): Unit = {
-    val spark = graft.sources.Sessions.local("32", logLevel = "ERROR")
+    val spark = graft.sources.Sessions.localFromEnv(logLevel = "ERROR")
     val d = if (args.nonEmpty) args(0) else "/root/testdata/sf0.1"
     if (args.length > 1 && args(1) == "time") {
       // Repeat-time one query in a warm JVM: where did the floor go?

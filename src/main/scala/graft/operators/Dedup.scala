@@ -786,11 +786,12 @@ object Dedup extends org.apache.spark.internal.Logging {
     * shingle-overlap core ([[pairOverlapFromShingles]] — the family's
     * dominant cost) and differ only in the final score projection. When
     * the requested product's SIBLING is also absent, the core computes
-    * once (persisted), the sibling is derived from it and published
-    * directly (its own manifest/key — consumers and eviction see exactly
-    * the product its own builder would have written; identical rows: the
-    * score tails are pure projections of the same overlap frame), and the
-    * requested frame is returned for getOrBuild's normal publish. A cold
+    * once (persisted), the sibling is derived from it and published by a
+    * nested getOrBuild under its own key (consumers and eviction see
+    * exactly the product its own builder would have written; identical
+    * rows: the score tails are pure projections of the same overlap
+    * frame), and the requested frame is returned for getOrBuild's normal
+    * publish. A cold
     * pipeline thus pays ONE overlap scan for both pair tables. When the
     * sibling already exists, this is the plain single-product build. */
   private def pairProductBuild(s: SparkSession, d: String, maxDf: Long,
@@ -810,19 +811,11 @@ object Dedup extends org.apache.spark.internal.Logging {
         if (wantJac) jacOf(ov0) else contOf(ov0), sh)
     else {
       val ov = ov0.persist(StorageLevel.MEMORY_AND_DISK)
-      val t0 = System.nanoTime()
-      val tmp = ArtifactCache.newTmpDir(sibDir)
-      try {
-        (if (wantJac) contOf(ov) else jacOf(ov))
-          .write.mode("overwrite").parquet(tmp)
-        ArtifactCache.writeManifest(tmp,
-          ArtifactCache.keyString(sibName, keyFile, sibParams))
-      } catch { case e: Throwable => ArtifactCache.rmTree(tmp); throw e }
-      ArtifactCache.publish(tmp, sibDir)
-      // The sibling's products entry prices its marginal write; the
-      // shared core is inside the requester's getOrBuild timing.
-      ArtifactCache.recordBuild(ArtifactCache.baseName(sibDir),
-        (System.nanoTime() - t0) / 1e9)
+      // The sibling publishes through the cache's own miss path (its key,
+      // manifest and build timing — the timing prices its marginal write;
+      // the shared core is inside the requester's getOrBuild timing).
+      ArtifactCache.getOrBuild(s, sibName, keyFile, sibParams)(
+        if (wantJac) contOf(ov) else jacOf(ov)): Unit
       // Registered AFTER the sibling's write action, so the next
       // completed action — getOrBuild's own parquet write of the
       // returned frame — releases the shared core.

@@ -87,7 +87,7 @@ object Similarity {
       .drop("bb")
   }
 
-  private def corpus(s: SparkSession, d: String): DataFrame =
+  private[graft] def corpus(s: SparkSession, d: String): DataFrame =
     Tables.embeddings(s, d)
       .select(col("vec_id"), toDoubleArr(col("embedding")).as("v"))
       .withColumn("nrm", l2Norm(col("v")))
@@ -1771,11 +1771,20 @@ object Similarity {
       bucketCap: Long = KnnBucketCap): DataFrame = {
     val r = if (rows > 0) rows
       else bandRowsFor(Tables.embeddings(s, d).count())
-    graft.sources.ArtifactCache.getOrBuild(s, "knngraph",
-      s"$d/embeddings.parquet",
-      Seq(k, bands, r, bucketCap, KnnGraphVersion))(
+    knnGraphProduct(s, d, k, bands, r, bucketCap)(
       knnGraphDf(Tables.embeddings(s, d), k, bands, r, bucketCap))
   }
+
+  /** The knngraph product's key and publication, in ONE place: both
+    * [[knnGraphShared]] and [[navGraphBuild]] (which feeds the build its
+    * own persisted frames on a cold run) resolve the same key, so a warm
+    * run of either serves the other. */
+  private def knnGraphProduct(s: SparkSession, d: String, k: Int,
+      bands: Int, rows: Int, bucketCap: Long)(
+      build: => DataFrame): DataFrame =
+    graft.sources.ArtifactCache.getOrBuild(s, "knngraph",
+      s"$d/embeddings.parquet",
+      Seq(k, bands, rows, bucketCap, KnnGraphVersion))(build)
 
   /** Same, over any (vec_id, embedding: array<float|double>) DataFrame
     * (planted tests). `rows` = 0 resolves [[bandRowsFor]] on the
@@ -2314,12 +2323,9 @@ object Similarity {
     // The knngraph product this build consumes runs the IDENTICAL
     // corpus/keys/eligibility chain — on a COLD run its builder reuses
     // the frames persisted above (one corpus scan + one projection pass
-    // for both products, guide §5); the key is byte-identical to
-    // [[knnGraphShared]]'s, so a warm run scans the stored edges and the
-    // closure never evaluates.
-    val knnRanked = graft.sources.ArtifactCache.getOrBuild(s, "knngraph",
-        s"$d/embeddings.parquet",
-        Seq(KnnK, 8, rowsN, KnnBucketCap, KnnGraphVersion))(
+    // for both products, guide §5); the key is [[knnGraphShared]]'s, so a
+    // warm run scans the stored edges and the closure never evaluates.
+    val knnRanked = knnGraphProduct(s, d, KnnK, 8, rowsN, KnnBucketCap)(
         knnGraphFromCapped(c, ck, KnnK))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val knn = knnRanked.select("src", "dst")
@@ -2616,62 +2622,29 @@ object Similarity {
     // (graph_state, qid), so the two graphs' walks share every round's
     // scheduling and checkpoint instead of paying 2 × GraphRounds
     // sequential jobs (measured: halves the eval's wall clock). Each
-    // keyed slice is EXACTLY the per-graph walk — partitioned windows
-    // and the gs-keyed edge join cannot leak candidates across graphs.
-    val edges = base.withColumn("gs", lit("base"))
-      .unionAll(post.withColumn("gs", lit("post_insert")))
+    // keyed slice is EXACTLY the per-graph walk (pinned in SimilaritySpec):
+    // partitioned windows and the edge-visibility predicate cannot leak
+    // candidates across graphs.
+    val edges = base.withColumn("edge_gs", lit("base"))
+      .unionAll(post.withColumn("edge_gs", lit("post_insert")))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val gsLabels = Seq("base", "post_insert").toDF("gs")
-    val q = c.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
-    // NO beam-side broadcast hints here, unlike [[graphWalk]]: measured
-    // A/B (r16, bench protocol, 2×2 interleave) put the hinted form at
-    // 5.0-5.9 s vs 3.5-3.7 s unhinted — the gs-keyed walk runs TWO graph
-    // states through every round, and forcing a driver-collected
-    // broadcast build per round serializes work AQE otherwise overlaps.
-    // The per-round join keys stay bounded either way (beam × |gs|).
-    def score(cand: DataFrame): DataFrame = cand
-      .join(c.select(col("vec_id").as("cid"), col("v"), col("nrm")), "cid")
-      .join(broadcast(q), "qid")
-      .select(col("gs"), col("qid"), col("cid"),
-        e4(dotD(col("v"), col("qv")) / (col("nrm") * col("qn"))).as("sim_e4"))
-    val w = Window.partitionBy("gs", "qid").orderBy(desc("sim_e4"), asc("cid"))
-    var beam = score(q.select(col("qid")).crossJoin(broadcast(gsLabels))
-        .withColumn("cid", lit(GraphEntry)))
-      .localCheckpoint(true)
-    val states = scala.collection.mutable.ArrayBuffer(beam)
-    for (_ <- 1 to GraphRounds) {
-      val nbrs = beam.select(col("gs"), col("qid"), col("cid").as("src"))
-        .join(edges, Seq("gs", "src"))
-        .select(col("gs"), col("qid"), col("dst").as("cid"))
-      val cand = beam.select("gs", "qid", "cid").unionAll(nbrs).distinct()
-      beam = score(cand)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= GraphBeam)
-        .select("gs", "qid", "cid", "sim_e4")
-        .localCheckpoint(true)
-      states += beam
+    val walk = graphWalk(c, edges, nQueries, lit(GraphBeam), GraphRounds,
+        Seq("gs"), Some(col("edge_gs") === col("gs"))) { (q, c) =>
+      fixedEntries(q, c).crossJoin(broadcast(gsLabels))
     }
-    val sel = beam
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("gs"), col("qid"), col("cid"), lit(1L).as("hit"))
     val brute = bruteTopK(s, d, nQueries, k).select(col("qid"), col("cid"))
-    val hits = brute.crossJoin(broadcast(gsLabels))
-      .join(sel, Seq("gs", "qid", "cid"), "left")
-      .groupBy("gs")
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"),
-        count(lit(1)).as("n_brute"))
-    val edgeCounts = edges.groupBy("gs").agg(count(lit(1)).as("n_edges"))
-    states.dropRight(1).foreach(org.apache.spark.sql.graft.Checkpoints.release)
+    val hits = walkRecall(brute.crossJoin(broadcast(gsLabels)),
+      walk.states.last, walk.w, k, Seq("gs"))
+    val edgeCounts = edges.groupBy(col("edge_gs").as("gs"))
+      .agg(count(lit(1)).as("n_edges"))
+    walk.states.dropRight(1).foreach(org.apache.spark.sql.graft.Checkpoints.release)
     graft.functions.Caching.releaseAfterAction(
       hits.join(edgeCounts, "gs")
         .select(col("gs").as("graph_state"), col("hits"), col("n_brute"),
-          round(col("hits") * lit(10000.0) / col("n_brute")).cast("long")
-            .as("recall_e4"),
-          col("n_edges"))
+          col("recall_e4"), col("n_edges"))
         .orderBy("graph_state"),
-      c, edges, states.last)
+      walk.caches :+ walk.states.last: _*)
   }
 
   /** Batch count of the SEQUENTIAL insert eval. */
@@ -2773,44 +2746,14 @@ object Similarity {
       .groupBy("src", "dst").agg(min("fb").as("fb"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val gsLabels = (0L to batches.toLong).toDF("gs")
-    val q = c.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
-    // NO beam-side broadcast hints in the multi-state walk — same
-    // measured A/B as [[evalNavInsert]]: per-round broadcast builds over
-    // |gs| graph states serialize work AQE otherwise overlaps.
-    def score(cand: DataFrame): DataFrame = cand
-      .join(c.select(col("vec_id").as("cid"), col("v"), col("nrm")), "cid")
-      .join(broadcast(q), "qid")
-      .select(col("gs"), col("qid"), col("cid"),
-        e4(dotD(col("v"), col("qv")) / (col("nrm") * col("qn"))).as("sim_e4"))
-    val w = Window.partitionBy("gs", "qid").orderBy(desc("sim_e4"), asc("cid"))
-    var beam = score(q.select(col("qid")).crossJoin(broadcast(gsLabels))
-        .withColumn("cid", lit(GraphEntry)))
-      .localCheckpoint(true)
-    val walkStates = scala.collection.mutable.ArrayBuffer(beam)
-    for (_ <- 1 to GraphRounds) {
-      val nbrs = beam.select(col("gs"), col("qid"), col("cid").as("src"))
-        .join(edges, Seq("src"))
-        .filter(col("fb") <= col("gs"))
-        .select(col("gs"), col("qid"), col("dst").as("cid"))
-      val cand = beam.select("gs", "qid", "cid").unionAll(nbrs).distinct()
-      beam = score(cand)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= GraphBeam)
-        .select("gs", "qid", "cid", "sim_e4")
-        .localCheckpoint(true)
-      walkStates += beam
+    // State gs walks the edges {fb <= gs}: one keyed walk, one edge frame.
+    val walk = graphWalk(c, edges, nQueries, lit(GraphBeam), GraphRounds,
+        Seq("gs"), Some(col("fb") <= col("gs"))) { (q, c) =>
+      fixedEntries(q, c).crossJoin(broadcast(gsLabels))
     }
-    val sel = beam
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") <= k)
-      .select(col("gs"), col("qid"), col("cid"), lit(1L).as("hit"))
     val brute = bruteTopK(s, d, nQueries, k).select(col("qid"), col("cid"))
-    val hits = brute.crossJoin(broadcast(gsLabels))
-      .join(sel, Seq("gs", "qid", "cid"), "left")
-      .groupBy("gs")
-      .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"),
-        count(lit(1)).as("n_brute"))
+    val hits = walkRecall(brute.crossJoin(broadcast(gsLabels)),
+      walk.states.last, walk.w, k, Seq("gs"))
     // Per-state degree stats from the tagged frame: state gs's edge set
     // is {fb <= gs}, so one small cross join against the B+1 labels
     // reproduces the old per-state-copy aggregate exactly.
@@ -2823,17 +2766,14 @@ object Similarity {
       .select(col("gs"), col("n_edges"), col("max_out_deg"),
         round(col("n_edges") * lit(10000.0) / col("n_src")).cast("long")
           .as("mean_deg_e4"))
-    walkStates.dropRight(1)
-      .foreach(org.apache.spark.sql.graft.Checkpoints.release)
+    walk.states.dropRight(1).foreach(org.apache.spark.sql.graft.Checkpoints.release)
     graft.functions.Caching.releaseAfterAction(
       hits.join(degs, "gs")
         .select(col("gs").as("batch"), col("n_edges"), col("hits"),
-          col("n_brute"),
-          round(col("hits") * lit(10000.0) / col("n_brute")).cast("long")
-            .as("recall_e4"),
-          col("max_out_deg"), col("mean_deg_e4"))
+          col("n_brute"), col("recall_e4"), col("max_out_deg"),
+          col("mean_deg_e4"))
         .orderBy("batch"),
-      (Seq(c, edges, walkStates.last) ++ inPlanDeltas.toSeq): _*)
+      ((walk.caches :+ walk.states.last) ++ inPlanDeltas.toSeq): _*)
   }
 
   /** NAVIGABILITY AUDIT (`eval_graph_connectivity`) — the structural
@@ -2917,9 +2857,7 @@ object Similarity {
     * sim_knn_graph plus the shared navigable-edge CTEs. */
   def graphTopK(s: SparkSession, d: String, nQueries: Int = 10, k: Int = 5,
       beam: Int = GraphBeam, rounds: Int = GraphRounds): DataFrame =
-    graphSearchFrom(s, d, nQueries, k, beam, rounds) { (q, _) =>
-      q.select(col("qid")).withColumn("cid", lit(GraphEntry))
-    }
+    graphSearchFrom(s, d, nQueries, k, beam, rounds)(fixedEntries)
 
   /** Deterministic tombstone set for the index-deletion path: vec_ids
     * ≡ [[NavDeleteRes]] (mod [[NavDeleteMod]]) play deleted/withdrawn
@@ -2941,7 +2879,7 @@ object Similarity {
     * last beam state is filtered by the tombstone predicate BEFORE the
     * top-k window, so the freed slots go to the next-best survivors
     * (neighbors re-rank, pinned in the spec). Same fixed-entry walk as
-    * [[graphTopK]] ([[graphWalk]] — shared loop, not a copy);
+    * [[graphTopK]] ([[navWalk]] — shared loop, not a copy);
     * tombstoned ids are dropped whether they are true neighbors or
     * not. Compaction: the tombstone set is a serving-layer overlay —
     * at the next product rebuild the corpus table no longer carries
@@ -2956,20 +2894,9 @@ object Similarity {
     * same plan shape, id-set-sized broadcast. */
   def navDeleteTopK(s: SparkSession, d: String, nQueries: Int = 10,
       k: Int = 5, beam: Int = GraphBeam,
-      rounds: Int = GraphRounds): DataFrame = {
-    val walk = graphWalk(s, d, nQueries, beam, rounds) { (q, _) =>
-      q.select(col("qid")).withColumn("cid", lit(GraphEntry))
-    }
-    walk.states.dropRight(1)
-      .foreach(org.apache.spark.sql.graft.Checkpoints.release)
-    graft.functions.Caching.releaseAfterAction(
-      walk.states.last
-        .filter(col("cid") % NavDeleteMod =!= NavDeleteRes)
-        .withColumn("rn", row_number().over(walk.w).cast("long"))
-        .filter(col("rn") <= k)
-        .orderBy("qid", "rn"),
-      walk.caches: _*)
-  }
+      rounds: Int = GraphRounds): DataFrame =
+    searchTail(navWalk(s, d, nQueries, lit(beam), rounds)(fixedEntries), k,
+      _.filter(col("cid") % NavDeleteMod =!= NavDeleteRes))
 
   /** Coarse-layer stride: every CoarseMod-th vector forms the upper
     * layer the layered search picks its entry from (n/CoarseMod coarse
@@ -3101,17 +3028,29 @@ object Similarity {
     val n = if (beam > 0 && rounds > 0) 0L else corpusCount(s, d)
     graphSearchFrom(s, d, nQueries, k,
       if (beam > 0) beam else graphBeamFor(n),
-      if (rounds > 0) rounds else layeredRoundsFor(n)) { (q, c) =>
-      val coarse = c.filter(col("vec_id") % CoarseMod === 0)
-        .select(col("vec_id").as("cc"), col("v").as("cv"), col("nrm").as("cn"))
-      val wEnt = Window.partitionBy("qid").orderBy(desc("cs"), asc("cc"))
-      q.crossJoin(broadcast(coarse))
-        .select(col("qid"), col("cc"),
-          e4(dotD(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cs"))
-        .withColumn("rn", row_number().over(wEnt))
-        .filter(col("rn") <= LayeredEntryK)
-        .select(col("qid"), col("cc").as("cid"))
-    }
+      if (rounds > 0) rounds else layeredRoundsFor(n))(exactEntries)
+  }
+
+  /** The fixed-entry rule: every query starts at [[GraphEntry]]. Entry
+    * rules map (queries, corpus) to the walk's (qid, cid) start rows. */
+  private def fixedEntries(q: DataFrame, c: DataFrame): DataFrame =
+    q.select(col("qid")).withColumn("cid", lit(GraphEntry))
+
+  /** The coarse layer the layered entry rules pick from, as (cc, cv, cn). */
+  private def coarseLayer(c: DataFrame): DataFrame =
+    c.filter(col("vec_id") % CoarseMod === 0)
+      .select(col("vec_id").as("cc"), col("v").as("cv"), col("nrm").as("cn"))
+
+  /** The layered-exact entry rule ([[graphLayeredTopK]]): each query's
+    * best [[LayeredEntryK]] coarse nodes by an exact coarse scan. */
+  private def exactEntries(q: DataFrame, c: DataFrame): DataFrame = {
+    val wEnt = Window.partitionBy("qid").orderBy(desc("cs"), asc("cc"))
+    q.crossJoin(broadcast(coarseLayer(c)))
+      .select(col("qid"), col("cc"),
+        e4(dotD(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cs"))
+      .withColumn("rn", row_number().over(wEnt))
+      .filter(col("rn") <= LayeredEntryK)
+      .select(col("qid"), col("cc").as("cid"))
   }
 
   /** LAYERED search with a BANDED entry (`sim_graph_layered_banded`) —
@@ -3141,35 +3080,39 @@ object Similarity {
     val n = if (beam > 0 && rounds > 0) 0L else corpusCount(s, d)
     graphSearchFrom(s, d, nQueries, k,
       if (beam > 0) beam else graphBeamFor(n),
-      if (rounds > 0) rounds else layeredRoundsFor(n)) { (q, c) =>
-      val coarse = c.filter(col("vec_id") % CoarseMod === 0)
-      // Entry geometry: the band rule over the COARSE layer, so the
-      // per-query entry candidate set stays occupancy-bounded at any n
-      // (4 at every contract corpus — oracles unchanged).
-      val eRows = entryBandRowsFor(coarse.count())
-      val ck = bandedKeys(coarse.select("vec_id", "v"), 8, eRows)
-        .select(col("vec_id").as("cc"), col("band_idx"), col("band_key"))
-      val qk = bandedKeys(
-        q.select(col("qid").as("vec_id"), col("qv").as("v")), 8, eRows)
-        .select(col("vec_id").as("qid"), col("band_idx"), col("band_key"))
-      val cand = ck.join(broadcast(qk), Seq("band_idx", "band_key"))
-        .filter(col("qid") =!= col("cc"))
-        .select("qid", "cc").distinct()
-      val wEnt = Window.partitionBy("qid").orderBy(desc("cs"), asc("cc"))
-      val banded = cand
-        .join(coarse.select(col("vec_id").as("cc"), col("v").as("cv"),
-          col("nrm").as("cn")), "cc")
-        .join(broadcast(q), "qid")
-        .select(col("qid"), col("cc"),
-          e4(dotD(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cs"))
-        .withColumn("rn", row_number().over(wEnt))
-        .filter(col("rn") <= LayeredEntryK)
-        .select(col("qid"), col("cc").as("cid"))
-      val fallback = q.select(col("qid"))
-        .join(banded.select(col("qid")).distinct(), Seq("qid"), "left_anti")
-        .withColumn("cid", lit(GraphEntry))
-      banded.unionAll(fallback)
-    }
+      if (rounds > 0) rounds else layeredRoundsFor(n))(bandedEntries)
+  }
+
+  /** The layered-banded entry rule ([[graphLayeredBandedTopK]]): each
+    * query's best [[LayeredEntryK]] among its coarse bucket-mates, or the
+    * fixed [[GraphEntry]] when every band misses the coarse layer. */
+  private def bandedEntries(q: DataFrame, c: DataFrame): DataFrame = {
+    val coarse = coarseLayer(c)
+    // Entry geometry: the band rule over the COARSE layer, so the
+    // per-query entry candidate set stays occupancy-bounded at any n
+    // (4 at every contract corpus — oracles unchanged).
+    val eRows = entryBandRowsFor(coarse.count())
+    val ck = bandedKeys(coarse.select(col("cc").as("vec_id"), col("cv").as("v")),
+        8, eRows)
+      .select(col("vec_id").as("cc"), col("band_idx"), col("band_key"))
+    val qk = bandedKeys(q.select(col("qid").as("vec_id"), col("qv").as("v")),
+        8, eRows)
+      .select(col("vec_id").as("qid"), col("band_idx"), col("band_key"))
+    val wEnt = Window.partitionBy("qid").orderBy(desc("cs"), asc("cc"))
+    val banded = ck.join(broadcast(qk), Seq("band_idx", "band_key"))
+      .filter(col("qid") =!= col("cc"))
+      .select("qid", "cc").distinct()
+      .join(coarse, "cc")
+      .join(broadcast(q), "qid")
+      .select(col("qid"), col("cc"),
+        e4(dotD(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cs"))
+      .withColumn("rn", row_number().over(wEnt))
+      .filter(col("rn") <= LayeredEntryK)
+      .select(col("qid"), col("cc").as("cid"))
+    val fallback = q.select(col("qid"))
+      .join(banded.select(col("qid")).distinct(), Seq("qid"), "left_anti")
+      .withColumn("cid", lit(GraphEntry))
+    banded.unionAll(fallback)
   }
 
   /** Third-layer stride: every [[CoarseMod]]²-th vector forms L2 — the
@@ -3325,178 +3268,165 @@ object Similarity {
     val layeredBeam = if (beam > 0) beam else graphBeamFor(nCorpus)
     val layeredRounds =
       if (beam > 0) LayeredRounds else layeredRoundsFor(nCorpus)
-    val c = corpus(s, d).persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = navGraphShared(s, d).select(col("src"), col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val q = c.filter(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
-    val coarse = c.filter(col("vec_id") % CoarseMod === 0)
-      .select(col("vec_id").as("cc"), col("v").as("cv"), col("nrm").as("cn"))
-    val wEnt = Window.partitionBy("qid").orderBy(desc("cs"), asc("cc"))
-    // fixed: the constant entry.
-    val fixedEnt = q.select(col("qid"))
-      .withColumn("cid", lit(GraphEntry))
-      .withColumn("st", lit("fixed"))
-    // layered_exact: graphLayeredTopK's entry rule.
-    val exactEnt = q.crossJoin(broadcast(coarse))
-      .select(col("qid"), col("cc"),
-        e4(dotD(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cs"))
-      .withColumn("rn", row_number().over(wEnt))
-      .filter(col("rn") <= LayeredEntryK)
-      .select(col("qid"), col("cc").as("cid"))
-      .withColumn("st", lit("layered_exact"))
-    // layered_banded: graphLayeredBandedTopK's entry rule (same coarse
-    // band geometry).
-    val eRows = entryBandRowsFor(coarse.count())
-    val ck = bandedKeys(coarse.select(col("cc").as("vec_id"), col("cv").as("v")),
-        8, eRows)
-      .select(col("vec_id").as("cc"), col("band_idx"), col("band_key"))
-    val qk = bandedKeys(q.select(col("qid").as("vec_id"), col("qv").as("v")),
-        8, eRows)
-      .select(col("vec_id").as("qid"), col("band_idx"), col("band_key"))
-    val bandedBest = ck.join(broadcast(qk), Seq("band_idx", "band_key"))
-      .filter(col("qid") =!= col("cc"))
-      .select("qid", "cc").distinct()
-      .join(coarse, "cc")
-      .join(broadcast(q), "qid")
-      .select(col("qid"), col("cc"),
-        e4(dotD(col("qv"), col("cv")) / (col("qn") * col("cn"))).as("cs"))
-      .withColumn("rn", row_number().over(wEnt))
-      .filter(col("rn") <= LayeredEntryK)
-      .select(col("qid"), col("cc").as("cid"))
-    val bandedEnt = bandedBest
-      .unionAll(q.select(col("qid"))
-        .join(bandedBest.select(col("qid")).distinct(), Seq("qid"),
-          "left_anti")
-        .withColumn("cid", lit(GraphEntry)))
-      .withColumn("st", lit("layered_banded"))
-    // ONE keyed walk to the max budget; each strategy reads its prefix.
-    // Bounded-side broadcasts, as in [[graphWalk]] (guide §3.1, §2.4).
-    def score(cand: DataFrame): DataFrame = broadcast(cand)
-      .join(c.select(col("vec_id").as("cid"), col("v"), col("nrm")), "cid")
-      .join(broadcast(q), "qid")
-      .select(col("st"), col("qid"), col("cid"),
-        e4(dotD(col("v"), col("qv")) / (col("nrm") * col("qn"))).as("sim_e4"))
-    val w = Window.partitionBy("st", "qid").orderBy(desc("sim_e4"), asc("cid"))
     val budgets = Map("fixed" -> GraphRounds,
       "layered_exact" -> layeredRounds, "layered_banded" -> layeredRounds)
-    // Per-strategy beam width, a plan-time literal on the strategy key —
-    // one keyed walk still serves all three rows.
+    // ONE keyed walk to the max budget; each strategy reads its prefix.
+    // Per-strategy beam width, a plan-time literal on the strategy key.
     val beamOf = when(col("st") === "fixed", lit(fixedBeam))
       .otherwise(lit(layeredBeam))
-    var beamDf = score(fixedEnt.unionAll(exactEnt).unionAll(bandedEnt)
-      .select("st", "qid", "cid")).localCheckpoint(true)
-    val states = scala.collection.mutable.ArrayBuffer(beamDf)
-    for (_ <- 1 to budgets.values.max) {
-      val nbrs = broadcast(beamDf.select(col("st"), col("qid"), col("cid").as("src")))
-        .join(edges, "src")
-        .select(col("st"), col("qid"), col("dst").as("cid"))
-      val cand = beamDf.select("st", "qid", "cid").unionAll(nbrs).distinct()
-      beamDf = score(cand)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= beamOf)
-        .select("st", "qid", "cid", "sim_e4")
-        .localCheckpoint(true)
-      states += beamDf
+    val walk = navWalk(s, d, nQueries, beamOf, budgets.values.max,
+        Seq("st")) { (q, c) =>
+      fixedEntries(q, c).withColumn("st", lit("fixed"))
+        .unionAll(exactEntries(q, c).withColumn("st", lit("layered_exact")))
+        .unionAll(bandedEntries(q, c).withColumn("st", lit("layered_banded")))
     }
     val brute = bruteTopK(s, d, nQueries, k).select(col("qid"), col("cid"))
       .persist(StorageLevel.MEMORY_AND_DISK)
     val rows = budgets.toSeq.sortBy(_._1).map { case (st, r) =>
-      val sel = states(r).filter(col("st") === st)
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= k)
-        .select(col("qid"), col("cid"), lit(1L).as("hit"))
-      brute.join(broadcast(sel), Seq("qid", "cid"), "left")
-        .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"),
-          count(lit(1)).as("n_brute"))
+      walkRecall(brute, walk.states(r).filter(col("st") === st), walk.w, k)
         .select(lit(st).as("strategy"), lit(r.toLong).as("rounds"),
-          col("hits"), col("n_brute"),
-          round(col("hits") * lit(10000.0) / col("n_brute")).cast("long")
-            .as("recall_e4"))
+          col("hits"), col("n_brute"), col("recall_e4"))
     }
     // Release only the rounds NO strategy reads as its prefix — the
     // budget states stay alive until the consumer's terminal action.
     val needed = budgets.values.toSet
-    states.zipWithIndex.collect { case (st, i) if !needed.contains(i) => st }
+    walk.states.zipWithIndex.collect { case (st, i) if !needed.contains(i) => st }
       .foreach(org.apache.spark.sql.graft.Checkpoints.release)
     graft.functions.Caching.releaseAfterAction(
       rows.reduce(_ unionAll _).orderBy("strategy"),
-      (Seq(c, edges, brute) ++ needed.toSeq.sorted.map(states(_))): _*)
+      ((walk.caches :+ brute) ++ needed.toSeq.sorted.map(walk.states(_))): _*)
   }
 
   /** The walk's full trace: per-round beam states (index 0 = the scored
     * entries), the per-round candidate frames (what each round scored),
-    * the ranking window, and the persisted frames the consumer releases
-    * after its terminal action. ONE loop produces every graph-tier
-    * result — the search tail, the layered variant, and the budget
-    * sweep all read this trace, so "a budget row is a prefix of the
-    * same walk" is true by construction, not by keeping copies in sync. */
-  private case class GraphWalkTrace(
+    * the ranking window, and the persisted inputs (corpus, edges) the
+    * consumer releases after its terminal action. Every graph-tier walk —
+    * the searches, the delete overlay, the budget sweep and the entry,
+    * insert and sequential-insert tables — reads a trace of [[graphWalk]],
+    * so "a budget row is a prefix of the same walk" and "a keyed slice is
+    * the single walk" hold by construction, not by keeping copies in
+    * sync. ([[graphHierTopK]]'s coarse descent is a separate, deliberately
+    * unrolled mini-walk with no checkpoints and no hints.) */
+  private[graft] case class GraphWalkTrace(
       states: IndexedSeq[DataFrame],
       cands: IndexedSeq[DataFrame],
       w: org.apache.spark.sql.expressions.WindowSpec,
       caches: Seq[DataFrame])
 
-  /** The shared beam loop: entries(q, corpus) → fixed-round best-first
-    * walk over the navigable-graph product ([[navGraphShared]]). Each
-    * round reads the previous beam TWICE (expansion + union), so the
-    * beam is checkpointed per round — without it the declarative plan
-    * doubles per round (measured: rounds ≥ 8 ran minutes instead of
+  /** THE beam loop of the graph tier: a fixed-round best-first walk from
+    * `entries(q, c)` — rows (keys…, qid, cid) over the first `nQueries`
+    * corpus vectors — along `edges` (src, dst, any tag columns). Each
+    * round expands the beam's out-neighbors, exact-scores the union, and
+    * keeps the top-`width` per (keys…, qid) by (sim desc, cid).
+    *
+    * `keys` run independent walks side by side, one job chain for all
+    * (entry strategies, graph states); `width` may differ per key (a
+    * plan-time expression over the key columns). `visible`, when set,
+    * says which keyed walk may traverse an edge — a predicate over the
+    * walk keys and the edge's tag columns — so each key walks its OWN
+    * edge set; unset, every key walks the same graph.
+    *
+    * Hint placement follows the edge set. Over one shared graph the beam
+    * and candidate sides of every round's joins are broadcast: they are
+    * nQueries × beam × out-degree rows at any corpus size, and the
+    * checkpointed beam carries no usable size estimate, so without the
+    * hint the planner shuffles the corpus-sized side every round (guide
+    * §3.1, §2.4). Over per-key edge sets the rounds run unhinted —
+    * measured (r16, bench protocol, 2×2 interleave) at 5.0-5.9 s hinted
+    * vs 3.5-3.7 s unhinted for the two-state insert eval: forcing a
+    * driver-collected broadcast build per round serializes work AQE
+    * otherwise overlaps. PlanSpec pins both placements.
+    *
+    * Each round reads the previous beam TWICE (expansion + union), so
+    * the beam is checkpointed per round — without it the declarative
+    * plan doubles per round (measured: rounds ≥ 8 ran minutes instead of
     * seconds). Same O(1)-plan recipe as the k-core/LPA loops. Every
     * per-round state is returned ALIVE; callers release what they keep. */
-  private def graphWalk(s: SparkSession, d: String, nQueries: Int,
-      beam: Int, rounds: Int)(
+  private[graft] def graphWalk(c: DataFrame, edges: DataFrame, nQueries: Int,
+      width: Column, rounds: Int, keys: Seq[String] = Nil,
+      visible: Option[Column] = None)(
       entries: (DataFrame, DataFrame) => DataFrame): GraphWalkTrace = {
-    val c = corpus(s, d).persist(StorageLevel.MEMORY_AND_DISK)
-    val edges = navGraphShared(s, d).select(col("src"), col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
     val q = c.filter(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"), col("nrm").as("qn"))
-    // The beam/candidate side of every per-round join is BOUNDED
-    // (nQueries × beam × out-degree rows — corpus-size-independent),
-    // while edges and the corpus scale with n. The explicit broadcast
-    // pins the build side: the checkpointed beam's LogicalRDD carries no
-    // usable size estimate, so without the hint the planner shuffles the
-    // corpus-sized side every round (guide §3.1, §2.4).
-    def scoreOf(cands: DataFrame): DataFrame = broadcast(cands)
+    val bounded: DataFrame => DataFrame =
+      if (visible.isEmpty) broadcast(_) else identity
+    val walkKey = (keys :+ "qid").map(col)
+    def scoreOf(cands: DataFrame): DataFrame = bounded(cands)
       .join(c.select(col("vec_id").as("cid"), col("v"), col("nrm")), "cid")
       .join(broadcast(q), "qid")
-      .select(col("qid"), col("cid"),
-        e4(dotD(col("v"), col("qv")) / (col("nrm") * col("qn"))).as("sim_e4"))
-    val w = Window.partitionBy("qid").orderBy(desc("sim_e4"), asc("cid"))
-    var beamDf = scoreOf(entries(q, c).select("qid", "cid"))
+      .select(walkKey ++ Seq(col("cid"),
+        e4(dotD(col("v"), col("qv")) / (col("nrm") * col("qn"))).as("sim_e4")): _*)
+    val w = Window.partitionBy(walkKey: _*).orderBy(desc("sim_e4"), asc("cid"))
+    var beamDf = scoreOf(entries(q, c).select(walkKey :+ col("cid"): _*))
       .localCheckpoint(true)
     val states = scala.collection.mutable.ArrayBuffer(beamDf)
     val cands = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     for (_ <- 1 to rounds) {
-      val nbrs = broadcast(beamDf.select(col("qid"), col("cid").as("src")))
+      val reached = bounded(beamDf.select(walkKey :+ col("cid").as("src"): _*))
         .join(edges, "src")
-        .select(col("qid"), col("dst").as("cid"))
-      val cand = beamDf.select("qid", "cid").unionAll(nbrs).distinct()
+      val nbrs = visible.fold(reached)(reached.filter)
+        .select(walkKey :+ col("dst").as("cid"): _*)
+      val cand = beamDf.select(walkKey :+ col("cid"): _*).unionAll(nbrs).distinct()
       cands += cand
       beamDf = scoreOf(cand)
         .withColumn("rn", row_number().over(w))
-        .filter(col("rn") <= beam)
-        .select("qid", "cid", "sim_e4")
+        .filter(col("rn") <= width)
+        .select(walkKey ++ Seq(col("cid"), col("sim_e4")): _*)
         .localCheckpoint(true)
       states += beamDf
     }
     GraphWalkTrace(states.toIndexedSeq, cands.toIndexedSeq, w, Seq(c, edges))
   }
 
-  /** Search tail over [[graphWalk]]: release every non-final state
-    * eagerly, rank the final beam, top-k. */
-  private def graphSearchFrom(s: SparkSession, d: String, nQueries: Int,
-      k: Int, beam: Int, rounds: Int)(
-      entries: (DataFrame, DataFrame) => DataFrame): DataFrame = {
-    val walk = graphWalk(s, d, nQueries, beam, rounds)(entries)
+  /** [[graphWalk]] over the corpus and the navigable-graph product
+    * ([[navGraphShared]]), both persisted for the walk's rounds. */
+  private def navWalk(s: SparkSession, d: String, nQueries: Int,
+      width: Column, rounds: Int, keys: Seq[String] = Nil)(
+      entries: (DataFrame, DataFrame) => DataFrame): GraphWalkTrace = {
+    val c = corpus(s, d).persist(StorageLevel.MEMORY_AND_DISK)
+    val edges = navGraphShared(s, d).select(col("src"), col("dst"))
+      .persist(StorageLevel.MEMORY_AND_DISK)
+    graphWalk(c, edges, nQueries, width, rounds, keys)(entries)
+  }
+
+  /** Search tail over a walk: release every non-final state eagerly,
+    * rank the final beam (after `keep`, a serving-time filter), top-k. */
+  private def searchTail(walk: GraphWalkTrace, k: Int,
+      keep: DataFrame => DataFrame = identity): DataFrame = {
     walk.states.dropRight(1).foreach(org.apache.spark.sql.graft.Checkpoints.release)
     graft.functions.Caching.releaseAfterAction(
-      walk.states.last
+      keep(walk.states.last)
         .withColumn("rn", row_number().over(walk.w).cast("long"))
         .filter(col("rn") <= k)
         .orderBy("qid", "rn"),
       walk.caches: _*)
+  }
+
+  /** [[searchTail]] over the navigable-graph walk from `entries`. */
+  private def graphSearchFrom(s: SparkSession, d: String, nQueries: Int,
+      k: Int, beam: Int, rounds: Int)(
+      entries: (DataFrame, DataFrame) => DataFrame): DataFrame =
+    searchTail(navWalk(s, d, nQueries, lit(beam), rounds)(entries), k)
+
+  /** The graph evals' recall tail: exact `brute` rows (keys…, qid, cid)
+    * left-joined with the top-k of `beam` under `w`, counted per key →
+    * (keys…, hits, n_brute, recall_e4). An unkeyed top-k (nQueries × k
+    * rows) is broadcast into the join; the graph-state evals' keyed
+    * top-k joins unhinted, as their walk's rounds do. */
+  private def walkRecall(brute: DataFrame, beam: DataFrame,
+      w: org.apache.spark.sql.expressions.WindowSpec, k: Int,
+      keys: Seq[String] = Nil): DataFrame = {
+    val sel = beam
+      .withColumn("rn", row_number().over(w))
+      .filter(col("rn") <= k)
+      .select((keys :+ "qid" :+ "cid").map(col) :+ lit(1L).as("hit"): _*)
+    brute.join(if (keys.isEmpty) broadcast(sel) else sel,
+        keys ++ Seq("qid", "cid"), "left")
+      .groupBy(keys.map(col): _*)
+      .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"),
+        count(lit(1)).as("n_brute"))
+      .withColumn("recall_e4",
+        round(col("hits") * lit(10000.0) / col("n_brute")).cast("long"))
   }
 
   /** The round budgets the beam sweep prices (ascending; max sets the
@@ -3517,13 +3447,11 @@ object Similarity {
       sweep: Seq[Int] = BeamSweep): DataFrame = {
     require(sweep.nonEmpty && sweep == sweep.sorted && sweep.head >= 1,
       "sweep must ascend over round budgets >= 1")
-    // ONE walk — literally [[graphTopK]]'s loop via [[graphWalk]], so a
+    // ONE walk — literally [[graphTopK]]'s loop via [[navWalk]], so a
     // budget row is a prefix of the same deterministic walk by shared
     // code, not by a hand-copied loop kept in sync (the round-13 advice).
     import s.implicits._
-    val walk = graphWalk(s, d, nQueries, beam, sweep.max) { (q, _) =>
-      q.select(col("qid")).withColumn("cid", lit(GraphEntry))
-    }
+    val walk = navWalk(s, d, nQueries, lit(beam), sweep.max)(fixedEntries)
     val brute = bruteTopK(s, d, nQueries, k).select(col("qid"), col("cid"))
     // The cumulative scanned-candidate counts for EVERY budget come from
     // ONE first-round-tagged aggregate: tag each round's candidate frame
@@ -3546,16 +3474,8 @@ object Similarity {
       .groupBy("rounds")
       .agg(sum(coalesce(col("cnt"), lit(0L))).as("scored_rows"))
     val hitRows = sweep.map { r =>
-      val sel = walk.states(r)
-        .withColumn("rn", row_number().over(walk.w))
-        .filter(col("rn") <= k)
-        .select(col("qid"), col("cid"), lit(1L).as("hit"))
-      brute.join(broadcast(sel), Seq("qid", "cid"), "left")
-        .agg(sum(coalesce(col("hit"), lit(0L))).as("hits"),
-          count(lit(1)).as("n_brute"))
-        .select(lit(r.toLong).as("rounds"), col("hits"),
-          round(col("hits") * lit(10000.0) / col("n_brute")).cast("long")
-            .as("recall_e4"))
+      walkRecall(brute, walk.states(r), walk.w, k)
+        .select(lit(r.toLong).as("rounds"), col("hits"), col("recall_e4"))
     }
     graft.functions.Caching.releaseAfterAction(
       hitRows.reduce(_ unionAll _)

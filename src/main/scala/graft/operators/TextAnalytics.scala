@@ -150,44 +150,24 @@ object TextAnalytics {
     *
     * Consumers read their table and join/order as before — rows are
     * identical by construction (the training loop is deterministic and
-    * all-integer), so every consumer's oracle is unchanged. The build is
-    * crash-safe and FIRST-WINS like the IVF-PQ index: tables land in a
-    * private tmp dir and an atomic rename publishes; concurrent cold
-    * starts both train and the losing copy is discarded complete.
+    * all-integer), so every consumer's oracle is unchanged. The build
+    * takes the cache's one miss path
+    * ([[graft.sources.ArtifactCache.getOrBuildDir]]): retention sweep,
+    * private tmp dir, manifest, first-wins atomic publish, and one
+    * rebuild if the product vanishes under a concurrent gc/evict.
     * Planted-test Df variants keep training self-contained. */
   private[graft] def ensureBpeProduct(s: SparkSession, d: String,
-      nMerges: Int = BpeMerges, batch: Int = BpeBatch): String = {
-    val srcFile = s"$d/documents.parquet"
-    val params = Seq(nMerges, batch, BpeProductVersion)
-    val key = graft.sources.ArtifactCache.keyString("bpe", srcFile, params)
-    val dir = graft.sources.ArtifactCache.path("bpe", srcFile, params)
-    if (!graft.sources.ArtifactCache.exists(s"$dir/merges")) {
-      val t0 = System.nanoTime()
+      nMerges: Int = BpeMerges, batch: Int = BpeBatch): String =
+    graft.sources.ArtifactCache.getOrBuildDir(s, "bpe", s"$d/documents.parquet",
+        Seq(nMerges, batch, BpeProductVersion)) { tmp =>
       import s.implicits._
       val (m, _, seg) = vocabTrainSeg(Tables.documents(s, d), nMerges, batch)
       try {
-        val tmp = graft.sources.ArtifactCache.newTmpDir(dir)
-        try {
-          m.toDF("merge_rank", "lhs", "rhs", "merged", "pair_cnt")
-            .coalesce(1).write.parquet(s"$tmp/merges")
-          seg.write.parquet(s"$tmp/seg")
-          graft.sources.ArtifactCache.writeManifest(tmp, key)
-        } catch { case e: Throwable =>
-          graft.sources.ArtifactCache.rmTree(tmp); throw e
-        }
-        // OUTSIDE the cleanup catch: a genuine publish failure keeps the
-        // completed tmp build on disk and names it in the error
-        // (ArtifactCache.publish's contract) — deleting it here would
-        // destroy the recoverable copy the message points at.
-        graft.sources.ArtifactCache.publish(tmp, dir)
-        graft.sources.ArtifactCache.recordBuild(
-          graft.sources.ArtifactCache.baseName(dir),
-          (System.nanoTime() - t0) / 1e9)
+        m.toDF("merge_rank", "lhs", "rhs", "merged", "pair_cnt")
+          .coalesce(1).write.parquet(s"$tmp/merges")
+        seg.write.parquet(s"$tmp/seg")
       } finally org.apache.spark.sql.graft.Checkpoints.release(seg)
     }
-    graft.sources.ArtifactCache.validateManifest(dir, key)
-    dir
-  }
 
   /** Same, over any (doc_id, text) DataFrame (planted tests). Each
     * pass's segmentation is an EAGER localCheckpoint: the merge fold

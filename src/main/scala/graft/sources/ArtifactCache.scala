@@ -337,13 +337,26 @@ object ArtifactCache {
   }
 
   /** Read the single-table product `name` keyed by (`keyFile`, `params`),
-    * building and publishing it first if absent. Concurrent builders each
-    * build into a PRIVATE tmp dir and race only on the atomic publish —
-    * first wins, losers discard their complete copy, every reader sees
-    * one complete product. A build that THROWS cleans its own tmp dir.
-    * Every hit validates the manifest (see [[validateManifest]]). */
+    * building and publishing it first if absent (see [[getOrBuildDir]]). */
   def getOrBuild(s: SparkSession, name: String, keyFile: String,
-      params: Seq[Any])(build: => DataFrame): DataFrame = {
+      params: Seq[Any])(build: => DataFrame): DataFrame =
+    s.read.parquet(getOrBuildDir(s, name, keyFile, params) { tmp =>
+      build.write.mode("overwrite").parquet(tmp)
+    })
+
+  /** The product directory of `name` keyed by (`keyFile`, `params`),
+    * built first if absent: `write` fills a PRIVATE tmp dir with the
+    * product's tables (one or several), the manifest lands next to them,
+    * and an atomic rename publishes. Concurrent builders race only on
+    * the publish — first wins, losers discard their complete copy, every
+    * reader sees one complete product. A miss first runs the opt-in
+    * retention sweep ([[autoGc]]); a write that THROWS cleans its own tmp
+    * dir and re-verifies the root on the next call; a product that
+    * vanishes between the check and the validation (a concurrent
+    * gc/evict) rebuilds once. Every hit validates the manifest (see
+    * [[validateManifest]]). */
+  private[graft] def getOrBuildDir(s: SparkSession, name: String,
+      keyFile: String, params: Seq[Any])(write: String => Unit): String = {
     val key = keyString(name, keyFile, params)
     val dir = path(name, keyFile, params)
     def buildIfAbsent(): Unit = if (!exists(dir)) {
@@ -351,13 +364,15 @@ object ArtifactCache {
       val t0 = System.nanoTime()
       val tmp = newTmpDir(dir)
       try {
-        build.write.mode("overwrite").parquet(tmp)
+        write(tmp)
         writeManifest(tmp, key)
       } catch { case e: Throwable =>
         invalidateRoot() // the failed write may mean a vanished/re-owned
         // root — the next root() re-verifies instead of trusting the memo
         rmTree(tmp); throw e
       }
+      // OUTSIDE the cleanup catch: a genuine publish failure keeps the
+      // completed tmp build on disk and names it in the error.
       publish(tmp, dir)
       recordBuild(baseName(dir), (System.nanoTime() - t0) / 1e9)
     }
@@ -373,7 +388,7 @@ object ArtifactCache {
         buildIfAbsent()
         validateManifest(dir, key)
     }
-    s.read.parquet(dir)
+    dir
   }
 
   /** AUTOMATIC retention, run BEFORE each miss-path build when the

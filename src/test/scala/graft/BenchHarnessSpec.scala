@@ -230,6 +230,16 @@ class BenchHarnessSpec extends AnyFunSuite {
         // a HIT never triggers the sweep: B re-reads fine under budget 0
         assert(ArtifactCache.getOrBuild(spark, "agcB", f.getAbsolutePath,
           Seq(1))(build(3)).count() === 1L)
+        // a multi-table product's miss (the BPE training product) takes
+        // the same miss path: its pre-build sweep evicts B, and the bpe
+        // product publishes after the sweep and survives
+        val bpeDir = graft.operators.TextAnalytics.ensureBpeProduct(spark,
+          TestSpark.sf, nMerges = 4)
+        val afterBpe = ArtifactCache.registry(spark).collect()
+          .map(_.getString(0)).toSet
+        assert(!afterBpe.contains("agcB"), "a bpe miss skipped the auto-gc sweep")
+        assert(afterBpe.contains("bpe") && ArtifactCache.exists(s"$bpeDir/merges"),
+          "auto-gc evicted the bpe product being built")
       } finally {
         spark.conf.unset("spark.graft.products.gc.maxBytes")
         spark.conf.unset("spark.graft.products.gc.minAgeMs")

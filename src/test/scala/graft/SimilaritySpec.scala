@@ -308,6 +308,54 @@ class SimilaritySpec extends AnyFunSuite {
     info(s"recall_e4 base=${base._2} post_insert=${post._2}")
   }
 
+  test("keyed graph walk: each graph-state slice IS the single walk over its edge set") {
+    // evalNavInsert(Seq) run their graph states as ONE gs-keyed walk; that
+    // is only sound if no candidate leaks across keys. Walk two different
+    // edge sets keyed, then each alone, and compare final beams row for row.
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.{col, lit}
+    import org.apache.spark.storage.StorageLevel
+    import org.apache.spark.sql.graft.Checkpoints
+    // the sf0.01 corpus, next to the sf0.001 test corpus
+    val d = new java.io.File(TestSpark.sf).getParent + "/sf0.01"
+    val c = Similarity.corpus(spark, d).persist(StorageLevel.MEMORY_AND_DISK)
+    val full = Similarity.navGraphShared(spark, d).select("src", "dst")
+    // A second, sparser graph: every third edge dropped.
+    val thin = full.filter((col("src") + col("dst")) % 3 =!= 0)
+    def entries(q: DataFrame, unused: DataFrame): DataFrame =
+      q.select(col("qid")).withColumn("cid", lit(Similarity.GraphEntry))
+    def walk(edges: DataFrame, keys: Seq[String] = Nil,
+        visible: Option[org.apache.spark.sql.Column] = None)(
+        entry: (DataFrame, DataFrame) => DataFrame) = {
+      val trace = Similarity.graphWalk(c, edges, 10, lit(Similarity.GraphBeam),
+        Similarity.GraphRounds, keys, visible)(entry)
+      val rows = trace.states.last
+        .select((keys ++ Seq("qid", "cid", "sim_e4")).map(col): _*)
+        .collect().map(_.toSeq.map(_.toString)).toSeq
+      trace.states.foreach(Checkpoints.release)
+      rows
+    }
+    val labels = Seq("full", "thin").toDF("gs")
+    val slices = walk(full.withColumn("edge_gs", lit("full"))
+        .unionAll(thin.withColumn("edge_gs", lit("thin"))),
+      Seq("gs"), Some(col("edge_gs") === col("gs"))) { (q, c0) =>
+      entries(q, c0).crossJoin(labels)
+    }.groupBy(_.head).map { case (gs, rows) => gs -> rows.map(_.tail) }
+    val (fullRows, thinRows) = (walk(full)(entries), walk(thin)(entries))
+    c.unpersist()
+    // Anti-vacuity: the two graphs must walk to different beams, or a
+    // leak between the slices could not show.
+    assert(fullRows.toSet != thinRows.toSet, "the two edge sets walk to the same beam")
+    assert(fullRows.size === 10 * Similarity.GraphBeam)
+    // (rows only in the slice, rows only in the single walk)
+    def mismatch(gs: String, single: Seq[Seq[String]]) =
+      (slices(gs).diff(single).size, single.diff(slices(gs)).size)
+    assert(mismatch("full", fullRows) === ((0, 0)),
+      "gs=full slice differs from the full-graph walk")
+    assert(mismatch("thin", thinRows) === ((0, 0)),
+      "gs=thin slice differs from the thin-graph walk")
+  }
+
   test("nav insert: a planted near-duplicate arrival attaches to its twin both ways") {
     import org.apache.spark.sql.functions.{col, when}
     val emb = spark.read.parquet(s"${TestSpark.sf}/embeddings.parquet")
